@@ -52,4 +52,24 @@ object GraftSession {
     // catalog tables (bucketed writes) land under /tmp, not the repo
     .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     .config("spark.ui.enabled", "false")
+    // Artifact isolation gives every session its own JobArtifactState,
+    // and StreamExecution clones the session on every query start, so
+    // each streaming run's tasks got a fresh executor-side class loader.
+    // CodeGenerator caches compiled classes per (class loader, code):
+    // every run recompiled all its codegen (sf0.001: q47 14 classes,
+    // q105 26, q265 16 per run). The engine adds no session artifacts
+    // (no addArtifact / addJar / ADD JAR), so isolation protects nothing
+    // here. Read only at session creation, hence a builder config.
+    .config("spark.sql.artifact.isolation.enabled", "false")
+    // The default FileContext-based manager calls getFileLinkStatus on
+    // every checkpoint rename; without libhadoop, RawLocalFileSystem
+    // answers that by forking `readlink` once per path. The FileSystem
+    // manager renames directly. Its one caveat is a rename that is not
+    // atomic on stores without atomic FileSystem.rename; local POSIX and
+    // HDFS renames are atomic (an object-store checkpoint location would
+    // need the FileContext manager back).
+    // State checkpoint checksums stay on (fileChecksum.enabled default).
+    .config("spark.sql.streaming.checkpointFileManagerClass",
+      "org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager")
 }

@@ -87,6 +87,12 @@ object EventStream {
     * shared session's conf would also re-plan any batch query planned
     * concurrently on that session with 4 shuffle partitions, a silent
     * parallelism collapse outside the streaming path.
+    *
+    * StreamExecution clones this session again on each query start, so
+    * every run executes on a new session. Reusing one pinned session
+    * would not avoid that clone; the per-clone executor class loader
+    * (and its codegen recompiles) is turned off in GraftSession by
+    * `spark.sql.artifact.isolation.enabled=false` instead.
     */
   private def statePinnedSession(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
@@ -352,6 +358,10 @@ object EventStream {
     * sink's temp view dropped before returning — otherwise every
     * invocation (bench medians run each entry 3x) pins another full
     * result copy in the catalog for the session lifetime.
+    *
+    * StreamExecution clones the pinned session on each query start, so
+    * no two runs share a session; compiled codegen is still shared
+    * across runs (see [[statePinnedSession]]).
     */
   def runToBatch(spark: SparkSession, build: SparkSession => DataFrame,
       name: String, mode: OutputMode = OutputMode.Complete()): DataFrame = {

@@ -9,6 +9,29 @@ class EventStreamSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   def sf: String = SparkTestSession.sf
 
+  /** Runs `body` with the streaming execution loggers off, restoring
+    * their configuration afterwards: for an intentionally failing query,
+    * whose stack trace (logged by MicroBatchExecution) would otherwise
+    * flood the test log.
+    */
+  private def withStreamingLogsOff[T](body: => T): T = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.config.Configurator
+    val name = "org.apache.spark.sql.execution.streaming"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    val saved = Option(cfg.getLoggers.get(name)).map(_.getLevel)
+    Configurator.setLevel(name, Level.OFF)
+    try body
+    finally {
+      saved match {
+        case Some(level) => Configurator.setLevel(name, level)
+        case None => cfg.removeLogger(name); ctx.updateLoggers()
+      }
+    }
+  }
+
   test("streaming hourly window equals the batch twin (counts per hour/type)") {
     val streamed = EventStream.runToBatch(
       spark, EventStream.hourlyStream(_, sf), "hourly_test")
@@ -204,9 +227,12 @@ class EventStreamSpec extends AnyFunSuite {
       // run 1: let at least one microbatch COMMIT, then stop
       // mid-stream; the 500 ms pacing keeps later batches from racing
       // past the stop() (progress events fire only AFTER a commit)
+      // an explicit file: URI, so the local-disk path goes through the
+      // configured checkpoint file manager the way a deployment's does
+      val ckpt = s"file:$base/ckpt"
       val q1 = aggStream().writeStream
         .outputMode("complete").format("memory").queryName("ckpt_run1")
-        .option("checkpointLocation", s"$base/ckpt")
+        .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger
           .ProcessingTime("500 milliseconds"))
         .start()
@@ -221,7 +247,7 @@ class EventStreamSpec extends AnyFunSuite {
       // run 2: same checkpoint, drain the rest
       val q2 = aggStream().writeStream
         .outputMode("complete").format("memory").queryName("ckpt_run2")
-        .option("checkpointLocation", s"$base/ckpt")
+        .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q2.awaitTermination()
@@ -241,6 +267,22 @@ class EventStreamSpec extends AnyFunSuite {
         .map(r => (r.getTimestamp(0), r.getString(1)) -> r.getLong(2)).toMap
       assert(streamed == batch)
       Seq("ckpt_run1", "ckpt_run2").foreach(spark.catalog.dropTempView(_))
+
+      // GraftSession swaps in the FileSystem-based checkpoint manager;
+      // Spark's own state-file checksums (`N.delta.crc`, unlike the
+      // local file system's hidden `.N.delta.crc`) must still be
+      // written for every committed state delta
+      assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        .endsWith(".FileSystemBasedCheckpointFileManager"))
+      assert(spark.conf.get(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true")
+      val stateFiles = org.apache.commons.io.FileUtils
+        .listFiles(new java.io.File(s"$base/ckpt/state"), null, true)
+        .toArray(Array.empty[java.io.File]).map(_.getName).toSet
+      val deltas = stateFiles.filter(_.matches("\\d+\\.delta"))
+      assert(deltas.nonEmpty, s"no state deltas under $base/ckpt/state")
+      val unsummed = deltas.filterNot(d => stateFiles(s"$d.crc"))
+      assert(unsummed.isEmpty, s"state deltas without a checksum: $unsummed")
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
@@ -567,8 +609,10 @@ class EventStreamSpec extends AnyFunSuite {
         catch { case e: org.apache.spark.sql.streaming
           .StreamingQueryException => Some(e) }
       }
-      // run 1: crash right after batch 1's files are on disk
-      val err = run(s"$base/out1", s"$base/ckpt1", crashOn = Some(1L))
+      // run 1: crash right after batch 1's files are on disk (its
+      // intended stack trace is kept out of the test log)
+      val err = withStreamingLogsOff(
+        run(s"$base/out1", s"$base/ckpt1", crashOn = Some(1L)))
       assert(err.exists(_.getMessage.contains("injected")),
         s"crash must surface: $err")
       val writtenPreCrash = digest(s"$base/out1/batch=1")
@@ -591,6 +635,29 @@ class EventStreamSpec extends AnyFunSuite {
         "exactly-once: no loss, no duplication")
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+  }
+
+  test("streaming reruns reuse compiled codegen: runs 2 and 3 of q47, q105 and q265 compile nothing") {
+    // StreamExecution clones the session on every query start; with
+    // artifact isolation on, each clone ran its tasks under a new
+    // executor class loader, and CodeGenerator's per-class-loader cache
+    // recompiled every class (on sf0.001: q47 14 classes per run)
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val entries = Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "q47" -> EventStream.hourlyToBatch,
+      "q105" -> EventStream.clickOutcomeToBatch,
+      "q265" -> EventStream.lateDataToBatch)
+    entries.foreach { case (name, run) =>
+      run(spark, sf) // run 1 may compile: it fills the cache
+      val perRun = (2 to 3).map { _ =>
+        val before = compiles()
+        run(spark, sf)
+        compiles() - before
+      }
+      assert(perRun == Seq(0L, 0L), s"$name compiles per rerun: $perRun")
+    }
   }
 
   test("q333 watermark planner equals a replay; drop curve is monotone and hits zero past the plant bound") {

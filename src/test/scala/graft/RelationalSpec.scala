@@ -1659,12 +1659,16 @@ class RelationalSpec extends AnyFunSuite {
     // structural collect, not substring-matching the rendered plan:
     // plan rendering differs across Spark versions and AQE
     // re-optimization can insert sorts after toString (round-18
-    // advice). collect recurses into AdaptiveSparkPlanExec's current
-    // physical plan via its children.
+    // advice). The frame is executed first so AQE's FINAL plan is the
+    // one checked; its materialized stages are leaves whose subtree
+    // sits in QueryStageExec.plan, not in children.
+    df.collect()
     def sortNodes(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SortExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         sortNodes(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        sortNodes(q.plan)
       case s: org.apache.spark.sql.execution.SortExec =>
         s +: s.children.flatMap(sortNodes)
       case other => other.children.flatMap(sortNodes) ++
